@@ -18,6 +18,11 @@ No code is copied from the reference; semantics are reproduced from its
 public behavior and test goldens (see SURVEY.md / FIXTURES.md).
 """
 
+# first: Spark Python workers that unpickle an engine UDF run this once
+from tantivy_search_spark import _worker
+
+_worker.install()
+
 from tantivy_search_spark.config import IndexConfig, verify_index_parameter
 from tantivy_search_spark.index.builder import IndexBuilder, assign_doc_ids
 from tantivy_search_spark.search.engine import SearchIndex, Statistics

@@ -969,6 +969,15 @@ class IndexBuilder:
                 f"resume: this build was checkpointed with docs_sha="
                 f"{docs_ck.get('docs_sha', 'sidecar')!r}; restart with "
                 f"overwrite=True to change it")
+        elif docs_ck.get("rows_per_part",
+                         self.rows_per_part) != self.rows_per_part:
+            # part ranges, the dense descriptor and every later stage
+            # are keyed by the checkpointed rows_per_part; mixing it with
+            # a new value would mis-assign docs to parts
+            raise ValueError(
+                f"resume: this build was checkpointed with rows_per_part="
+                f"{docs_ck['rows_per_part']!r}; restart with "
+                f"overwrite=True to change it")
         total_docs = docs_ck["total_docs"]
         metrics["stages"]["docs"] = docs_ck
 

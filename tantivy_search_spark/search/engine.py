@@ -1244,24 +1244,6 @@ class SearchIndex:
                 F.collect_list(F.struct(F.col("atom"), F.col("s")))
             ).alias("sc"))
 
-    def _scored_phrase_df(
-        self,
-        col: str,
-        terms: list[str],
-        atom_id: int,
-        stats: Statistics | None,
-        alive_bitmap: bytes | None,
-        slop: int = 0,
-        packed: bool = False,
-        n_subs: int = 1,
-        offsets: tuple | None = None,
-    ) -> DataFrame:
-        """Single phrase atom — thin wrapper over the multi-atom pass."""
-        return self._scored_phrases_df(
-            [(atom_id, col, list(terms), int(slop),
-              tuple(offsets) if offsets else None)],
-            stats, alive_bitmap, packed=packed, n_subs=n_subs)
-
     def _scored_phrases_df(
         self,
         phrase_plans: list,

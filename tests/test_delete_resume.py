@@ -163,6 +163,38 @@ class TestResume:
         assert len(ck["lineage"]) >= 1
         assert {"part_id", "terms", "postings", "tokens"} <= set(ck["lineage"][0])
 
+    def test_resume_rows_per_part_mismatch_raises(self, spark, tmp_path):
+        """A crashed build resumed with a different rows_per_part must
+        refuse: later stages would mix the checkpointed part ranges
+        with the new value."""
+        from tantivy_search_spark.config import IndexConfig
+        from tantivy_search_spark.index.builder import IndexBuilder
+        from tantivy_search_spark.search.engine import SearchIndex
+
+        path = str(tmp_path / "resume_rpp")
+        cfg = IndexConfig.from_json(["col1", "col2", "col3"], "{}")
+        df = spark.createDataFrame(corpus_a_rows())
+        b = IndexBuilder(spark, path, cfg, rows_per_part=2)
+        orig = b._ckpt_write
+
+        def bomb(name, payload):
+            orig(name, payload)
+            if name == "docs":
+                raise RuntimeError("injected crash after docs stage")
+
+        b._ckpt_write = bomb
+        with pytest.raises(RuntimeError, match="injected"):
+            b.build(df, id_col="doc_id")
+        with pytest.raises(ValueError, match="rows_per_part=2"):
+            IndexBuilder(spark, path, cfg, rows_per_part=3).build(
+                df, id_col="doc_id")
+        # resuming with the SAME value completes and serves
+        meta = IndexBuilder(spark, path, cfg, rows_per_part=2).build(
+            df, id_col="doc_id")
+        assert meta.total_docs == len(corpus_a_rows())
+        ix = SearchIndex(spark, path)
+        assert ix.bm25_search("ancient", top_k=10).count() > 0
+
     def test_full_rebuild_after_done_is_noop(self, spark, tmp_path):
         """Re-running build over a completed index skips all stages."""
         from tantivy_search_spark.config import IndexConfig
