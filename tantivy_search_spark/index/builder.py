@@ -4,22 +4,26 @@ Spark-first design — one tokenize pass, two shuffles total:
 
   stage docs     docs table: doc_id + metadata + sha256(content) — pure
                  JVM expressions (F.sha2), no Python.
-  stage segments ``groupBy(part_id).applyInPandas``: per doc-range part,
-                 tokenize (Arrow batch), count tf, build sorted
+  stage segments ``groupBy(part_id).applyInArrow`` (or, on ordered input,
+                 a shuffle-free ``mapInArrow``): per doc-range part,
+                 tokenize the Arrow column, count tf, build sorted
                  delta-encoded posting blocks with skip pointers and
-                 block-max metadata.  The reference's in-RAM segment build
-                 (2 threads x 64 MB heap) becomes one grouped-map task per
-                 part.  part_id = doc_id // rows_per_part, so the mapping
-                 is deterministic and resumable.
-  stage merge    ``groupBy(col, term, shard).applyInPandas``: concatenate
-                 part-local runs (disjoint sorted doc ranges) into merged
-                 posting rows; shard = part_id // parts_per_shard bounds
-                 group memory and doubles as the skew salt for hot terms
-                 ("if"/"return"); rows are further split into ``sub`` rows
-                 at max_postings_per_sub.  Output partitioned by
-                 bucket = crc32(term) % n_buckets for file pruning.
+                 block-max metadata straight into Arrow arrays.  The
+                 reference's in-RAM segment build (2 threads x 64 MB
+                 heap) becomes one grouped-map task per part.
+                 part_id = doc_id // rows_per_part, so the mapping is
+                 deterministic and resumable.
   stage stats    global term dictionary (col, term, df) — a map-side
-                 combinable sum over merged rows.
+                 combinable sum over the fragments (merging never
+                 changes a term's summed df).
+  stage merge    ``groupBy(col, term, shard).applyInPandas`` over the hot
+                 terms the stats table names: concatenate part-local
+                 runs (disjoint sorted doc ranges) into merged posting
+                 rows; shard = part_id // parts_per_shard bounds group
+                 memory and doubles as the skew salt for hot terms
+                 ("if"/"return"); rows are further split into ``sub``
+                 rows at max_postings_per_sub.  Output partitioned by
+                 bucket = crc32(term) % n_buckets for file pruning.
 
 Every stage writes a manifest under _checkpoints/ with per-part lineage
 (doc range, rows, tokens, wall secs, docs/sec); a restarted build skips
@@ -34,10 +38,12 @@ import os
 import shutil
 import sys
 import time
+import zlib
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
@@ -318,21 +324,27 @@ def assign_doc_ids_staged(
 
 
 def _segment_builder(cfg_json: str):
-    """Grouped-map fn: one doc-range part -> posting fragment rows."""
+    """Grouped-map fn: one doc-range part (``pa.Table``) -> posting
+    fragment rows (``pa.Table`` in SEGMENTS_ARROW_SCHEMA).
+
+    Arrow in, Arrow out: the Arrow tokenizer chain reads the text column
+    as is, the Python chains convert only the column they tokenize, and
+    :func:`layout.encode_blocks_arrow` writes every term's blocks into
+    Arrow arrays in one vectorized pass — no per-term Python object and
+    no pandas round trip on either side of the kernel."""
     cfg = IndexConfig.from_meta_json(cfg_json)
     bs = cfg.block_size
     pps = cfg.parts_per_shard
     nb = cfg.n_buckets
+    schema = layout.SEGMENTS_ARROW_SCHEMA
 
-    def build_part(pdf: pd.DataFrame) -> pd.DataFrame:
-        part_id = int(pdf["part_id"].iloc[0])
-        pdf = pdf.sort_values("doc_id")
-        doc_ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-        rows: dict[str, list] = {k: [] for k in (
-            "part_id", "bucket", "col", "term", "shard", "sub", "df",
-            "block_first", "block_last", "block_max_tf", "block_min_norm",
-            "deltas", "tfs", "norms", "positions", "sum_tf")}
-
+    def build_part(tbl: pa.Table) -> pa.Table:
+        part_id = int(tbl.column("part_id")[0].as_py())
+        doc_ids = tbl.column("doc_id").to_numpy().astype(np.int64)
+        if (np.diff(doc_ids) < 0).any():
+            order = np.argsort(doc_ids, kind="stable")
+            tbl, doc_ids = tbl.take(order), doc_ids[order]
+        batches = []
         for col in cfg.columns:
             col_cfg = cfg.tokenizer_config(col)
             pos_flat = None
@@ -343,60 +355,57 @@ def _segment_builder(cfg_json: str):
                 # (stop words, RemoveLong) leave gaps.
                 from tantivy_search_spark.udfs import (
                     term_doc_tf_pos, tokenize_series_pos)
-                toks, poss = tokenize_series_pos(pdf[col], col_cfg)
+                toks, poss = tokenize_series_pos(
+                    tbl.column(col).to_pandas(), col_cfg)
                 terms, t_docs, t_tfs, doclens, pos_flat = term_doc_tf_pos(
                     toks, doc_ids, poss)
             elif arrow_fast_eligible(col_cfg):
                 # Arrow C++ chain: no per-token PyObjects (hot path)
                 terms, t_docs, t_tfs, doclens = term_doc_tf_arrow(
-                    pdf[col], doc_ids, col_cfg)
+                    tbl.column(col), doc_ids, col_cfg)
             else:
-                toks = tokenize_series(pdf[col], col_cfg)
+                toks = tokenize_series(tbl.column(col).to_pandas(), col_cfg)
                 terms, t_docs, t_tfs, doclens = term_doc_tf(toks, doc_ids)
             if terms.size == 0:
                 continue
             norm_ids = fieldnorm_to_id(doclens)  # u8 per doc, aligned w/ doc_ids
-            doc_pos = np.searchsorted(doc_ids, t_docs)
-            t_norms = norm_ids[doc_pos]
+            t_norms = norm_ids[np.searchsorted(doc_ids, t_docs)]
             # term boundaries in the (term, doc)-sorted triples
             change = np.flatnonzero(terms[1:] != terms[:-1]) + 1
             bounds = np.concatenate(([0], change, [terms.size]))
-            nterms = bounds.size - 1
-            # one vectorized pass encodes every term's blocks (the old
-            # per-term encode_blocks call was the build hot loop at
-            # realistic vocabulary — 10^5+ python calls per part)
-            enc = layout.encode_blocks_many(t_docs, t_tfs, t_norms,
-                                            bounds, bs)
-            import zlib
             term_list = terms[bounds[:-1]]
-            rows["part_id"].extend([part_id] * nterms)
-            rows["bucket"].extend(
-                zlib.crc32(t.encode("utf-8")) % nb for t in term_list)
-            rows["col"].extend([col] * nterms)
-            rows["term"].extend(term_list)
-            rows["shard"].extend([part_id // pps] * nterms)
-            rows["sub"].extend([0] * nterms)
-            for k in ("df", "block_first", "block_last", "block_max_tf",
-                      "block_min_norm", "deltas", "tfs", "norms",
-                      "sum_tf"):
-                rows[k].extend(enc[k])
-            if pos_flat is not None:
-                cum_tf = np.concatenate(
-                    ([0], np.cumsum(t_tfs, dtype=np.int64)))
-                rows["positions"].extend(
-                    pos_flat[cum_tf[bounds[i]]:cum_tf[bounds[i + 1]]]
-                    .tobytes() for i in range(nterms))
-            else:
-                rows["positions"].extend([b""] * nterms)
-        return pd.DataFrame(rows)
+            buckets = np.fromiter(
+                (zlib.crc32(t.encode("utf-8")) % nb for t in term_list),
+                dtype=np.int32, count=term_list.size)
+            cum_tf = np.concatenate(([0], np.cumsum(t_tfs, dtype=np.int64)))
+            for i0, i1 in layout.term_slices(bounds, t_tfs,
+                                             pos_flat is not None):
+                b0, b1 = bounds[i0], bounds[i1]
+                enc = layout.encode_blocks_arrow(
+                    t_docs[b0:b1], t_tfs[b0:b1], t_norms[b0:b1],
+                    bounds[i0:i1 + 1] - b0, bs,
+                    None if pos_flat is None
+                    else pos_flat[cum_tf[b0]:cum_tf[b1]])
+                n = i1 - i0
+                enc.update({
+                    "part_id": pa.array(np.full(n, part_id, np.int32)),
+                    "bucket": pa.array(buckets[i0:i1]),
+                    "col": pa.array([col] * n, pa.string()),
+                    "term": pa.array(term_list[i0:i1], pa.string()),
+                    "shard": pa.array(np.full(n, part_id // pps, np.int32)),
+                    "sub": pa.array(np.zeros(n, np.int32)),
+                })
+                batches.append(pa.RecordBatch.from_arrays(
+                    [enc[f.name] for f in schema], schema=schema))
+        return pa.Table.from_batches(batches, schema=schema)
 
     return build_part
 
 
 def _segment_builder_stream(cfg_json: str):
-    """mapInPandas fn: the shuffle-FREE segments stage.
+    """mapInArrow fn: the shuffle-FREE segments stage.
 
-    ``groupBy(part_id).applyInPandas`` moves the whole corpus text
+    ``groupBy(part_id).applyInArrow`` moves the whole corpus text
     through an Exchange — at 100 TB that shuffle is the build's
     dominant byte-mover, and on bandwidth-capped hosts it is what
     breaks N->4N scaling.  When every input partition holds doc_ids in
@@ -427,17 +436,17 @@ def _segment_builder_stream(cfg_json: str):
     """
     build_part = _segment_builder(cfg_json)
 
-    def stream(it: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        buf: list[pd.DataFrame] = []
+    def stream(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        buf: list[pa.RecordBatch] = []
         cur_part = None
         last_doc = None
         flushed_max: dict[int, list[tuple[int, int]]] = {}
 
-        def flush():
-            pdf_all = pd.concat(buf, ignore_index=True)
+        def flush() -> list[pa.RecordBatch]:
+            tbl = pa.Table.from_batches(buf)
             part = int(cur_part)
-            lo = int(pdf_all["doc_id"].min())
-            hi = int(pdf_all["doc_id"].max())
+            ids = tbl.column("doc_id").to_numpy()
+            lo, hi = int(ids.min()), int(ids.max())
             # Disjointness, not order, is the requirement: a part split
             # across input files can arrive high-half first (Spark
             # packs files into tasks by size, not range).  Raise only
@@ -452,33 +461,37 @@ def _segment_builder_stream(cfg_json: str):
                         "build with segment_shuffle='group' for "
                         "arbitrary layouts")
             flushed_max.setdefault(part, []).append((lo, hi))
-            return build_part(pdf_all)
+            return build_part(tbl).to_batches()
 
-        for pdf in it:
-            if not len(pdf):
+        for batch in it:
+            if not batch.num_rows:
                 continue
-            ids = pdf["doc_id"].to_numpy()
+            ids = batch.column("doc_id").to_numpy()
+            parts = batch.column("part_id").to_numpy()
             # split the (possibly rebatched-across-files) batch into
-            # monotonic runs
+            # monotonic runs; part_id = doc_id // rows_per_part is then
+            # non-decreasing inside each run, so parts are contiguous
             breaks = (np.flatnonzero(np.diff(ids) < 0) + 1).tolist()
-            for s, e in zip([0] + breaks, breaks + [len(pdf)]):
-                seg = pdf.iloc[s:e]
+            for s, e in zip([0] + breaks, breaks + [len(ids)]):
                 if last_doc is not None and int(ids[s]) < last_doc:
                     if buf:
-                        yield flush()
+                        yield from flush()
                         buf = []
                     cur_part = None
                 last_doc = int(ids[e - 1])
-                for part, sub in seg.groupby("part_id", sort=True):
+                cuts = (np.flatnonzero(np.diff(parts[s:e]) != 0)
+                        + 1 + s).tolist()
+                for ps, pe in zip([s] + cuts, cuts + [e]):
+                    part = int(parts[ps])
                     if cur_part is None:
                         cur_part = part
                     if part != cur_part:
-                        yield flush()
+                        yield from flush()
                         buf = []
                         cur_part = part
-                    buf.append(sub)
+                    buf.append(batch.slice(ps, pe - ps))
         if buf:
-            yield flush()
+            yield from flush()
 
     return stream
 
@@ -594,6 +607,14 @@ def _concat_rows_to_subs(pdf: pd.DataFrame, bs: int,
                 else "object"))
             for k in out})
     return pd.DataFrame(out)
+
+
+def _term_stats(postings: DataFrame) -> DataFrame:
+    """Posting rows (fragments or merged — merging keeps every term's
+    summed df) -> the STATS_SCHEMA term dictionary (col, term, df,
+    bucket)."""
+    return postings.groupBy("col", "term").agg(
+        F.sum("df").alias("df"), F.first("bucket").alias("bucket"))
 
 
 #: one sidecar row per (col, term, chunk); `total` repeats the full
@@ -1055,11 +1076,11 @@ class IndexBuilder:
             if use_stream:
                 # zero-shuffle: parts cut inside each (ordered) input
                 # partition; see _segment_builder_stream
-                frags = chunk_df.mapInPandas(
+                frags = chunk_df.mapInArrow(
                     _segment_builder_stream(cfg_json),
                     layout.SEGMENTS_SCHEMA)
             else:
-                frags = chunk_df.groupBy("part_id").applyInPandas(
+                frags = chunk_df.groupBy("part_id").applyInArrow(
                     _segment_builder(cfg_json), layout.SEGMENTS_SCHEMA)
             frags.write.mode("overwrite").parquet(
                 os.path.join(seg_path, f"chunk={ci}")
@@ -1107,12 +1128,29 @@ class IndexBuilder:
             "docs_per_sec": total_docs / max(sum(c["secs"] for c in seg_metrics), 1e-9),
         }
 
+        # ---- stats stage ------------------------------------------------------
+        # merging never changes a term's summed df, so the global term
+        # dictionary is aggregated once, from the fragments, and the
+        # merge below reads its hot terms from it
+        segs = self.spark.read.parquet(os.path.join(seg_path, "chunk=*"))
+        stats_dir = os.path.join(self.index_path, STATS_DIR)
+        stats_ck = self._ckpt_done("stats")
+        if stats_ck is None:
+            t0 = time.time()
+            # partitionBy(bucket): per-query stats lookups prune partition
+            # dirs with the same bucket predicate as _candidate_postings
+            _term_stats(segs).write.mode("overwrite").partitionBy(
+                "bucket").parquet(stats_dir)
+            stats_ck = {"secs": time.time() - t0}
+            self._ckpt_write("stats", stats_ck)
+        metrics["stages"]["stats"] = stats_ck
+
         # ---- merge stage ----------------------------------------------------
         merge_ck = self._ckpt_done("merge")
         if merge_ck is None:
             t0 = time.time()
-            segs = self.spark.read.parquet(os.path.join(seg_path, "chunk=*"))
-            merged = self._merge_fragments(segs, cfg_json)
+            merged = self._merge_fragments(
+                segs, self.spark.read.parquet(stats_dir), cfg_json)
             merged.write.mode("overwrite").partitionBy("bucket").parquet(
                 os.path.join(self.index_path, POSTINGS_DIR)
             )
@@ -1121,23 +1159,6 @@ class IndexBuilder:
                         "docs_per_sec": total_docs / max(secs, 1e-9)}
             self._ckpt_write("merge", merge_ck)
         metrics["stages"]["merge"] = merge_ck
-
-        # ---- stats stage ------------------------------------------------------
-        stats_ck = self._ckpt_done("stats")
-        if stats_ck is None:
-            t0 = time.time()
-            postings = self.spark.read.parquet(
-                os.path.join(self.index_path, POSTINGS_DIR))
-            # partitionBy(bucket): per-query stats lookups prune partition
-            # dirs with the same bucket predicate as _candidate_postings
-            postings.groupBy("col", "term").agg(
-                F.sum("df").alias("df"),
-                F.first("bucket").alias("bucket"),
-            ).write.mode("overwrite").partitionBy("bucket").parquet(
-                os.path.join(self.index_path, STATS_DIR))
-            stats_ck = {"secs": time.time() - t0}
-            self._ckpt_write("stats", stats_ck)
-        metrics["stages"]["stats"] = stats_ck
 
         # ---- meta ----------------------------------------------------------
         total_tokens = {c: 0 for c in self.config.columns}
@@ -1199,7 +1220,8 @@ class IndexBuilder:
     #: _merge_fragments).  Tune per corpus; compact() folds the tail.
     merge_hot_df: int = 65_536
 
-    def _merge_fragments(self, segs: DataFrame, cfg_json: str) -> DataFrame:
+    def _merge_fragments(self, segs: DataFrame, term_stats: DataFrame,
+                         cfg_json: str) -> DataFrame:
         """Segment fragments -> posting rows: merge heavy hitters only.
 
         Fragments per (col, term, shard) group are bounded by
@@ -1219,18 +1241,29 @@ class IndexBuilder:
         merges small segments in the background, not on the write path
         — index_manager.rs:90-92).  ``sub`` for pass-through rows =
         part_id % parts_per_shard (unique within the shard).
+
+        ``term_stats`` holds (col, term, df) for the fragments in
+        ``segs`` — the stats table the build already wrote from them —
+        so the hot-term test is a filter over the term dictionary, not a
+        second aggregation over every fragment.
         """
         pps = self.config.parts_per_shard
-        hot_terms = (segs.groupBy("col", "term")
-                     .agg(F.sum("df").alias("_df"))
-                     .where(F.col("_df") >= self.merge_hot_df)
+        hot_terms = (term_stats.where(F.col("df") >= self.merge_hot_df)
                      .select("col", "term"))
+        post_cols = [f.name for f in layout.POSTINGS_SCHEMA.fields]
+
+        def passthrough(rows: DataFrame) -> DataFrame:
+            return rows.withColumn(
+                "sub", (F.col("part_id") % pps).cast("int")).select(*post_cols)
+
+        # the term dictionary is known before the merge: when it names no
+        # hot term (small builds and appends) every fragment passes
+        # through, with no semi/anti join and no empty grouped-map shuffle
+        if not hot_terms.limit(1).collect():
+            return passthrough(segs)
         big = segs.join(F.broadcast(hot_terms), ["col", "term"], "left_semi")
         small = segs.join(F.broadcast(hot_terms), ["col", "term"],
                           "left_anti")
-        post_cols = [f.name for f in layout.POSTINGS_SCHEMA.fields]
-        passthrough = small.withColumn(
-            "sub", (F.col("part_id") % pps).cast("int")).select(*post_cols)
         # pin the grouped-map exchange width: encoded fragment blobs are
         # small ON THE WIRE but each row costs a decode+concat+re-encode
         # pass in pandas, so AQE's byte-based coalescing (1-2 MB shuffle
@@ -1244,7 +1277,7 @@ class IndexBuilder:
         merged = (big.repartition(n_merge, "col", "term", "shard")
                   .groupBy("col", "term", "shard").applyInPandas(
                       _merger(cfg_json), layout.POSTINGS_SCHEMA))
-        return merged.unionByName(passthrough)
+        return merged.unionByName(passthrough(small))
 
     # -- compaction (reference B8, LogMergePolicy analog) ---------------------
     def compact(self, min_rows_per_group: int = 2,
@@ -1398,10 +1431,8 @@ class IndexBuilder:
         postings = spark.read.parquet(
             os.path.join(self.index_path, POSTINGS_DIR))
         stats_dir = os.path.join(self.index_path, STATS_DIR)
-        postings.groupBy("col", "term").agg(
-            F.sum("df").alias("df"), F.first("bucket").alias("bucket"),
-        ).write.mode("overwrite").partitionBy("bucket").parquet(
-            stats_dir + "_new")
+        _term_stats(postings).write.mode("overwrite").partitionBy(
+            "bucket").parquet(stats_dir + "_new")
         self._ensure_readable(stats_dir + "_new", layout.STATS_SCHEMA)
         os.rename(stats_dir, stats_dir + "_old")
         os.rename(stats_dir + "_new", stats_dir)
@@ -1744,11 +1775,8 @@ class IndexBuilder:
             # swaps before saving meta) — rebuild from live postings
             postings = self.spark.read.parquet(postings_dir)
             stats_dir = os.path.join(self.index_path, STATS_DIR)
-            postings.groupBy("col", "term").agg(
-                F.sum("df").alias("df"),
-                F.first("bucket").alias("bucket"),
-            ).write.mode("overwrite").partitionBy("bucket").parquet(
-                stats_dir + "_new")
+            _term_stats(postings).write.mode("overwrite").partitionBy(
+                "bucket").parquet(stats_dir + "_new")
             os.rename(stats_dir, stats_dir + "_old")
             os.rename(stats_dir + "_new", stats_dir)
             shutil.rmtree(stats_dir + "_old")
@@ -1773,7 +1801,8 @@ class IndexBuilder:
         src/index/implements/index_manager.rs:90-92): after the commit,
         if any (col, term, shard) group holds that many rows, run
         ``compact(min_rows_per_group=auto_compact_min_rows)`` inline.
-        Stats and meta totals are recomputed (cheap aggregates).
+        Stats grow by this append's term dfs and meta totals are
+        recomputed (cheap aggregates).
         """
         layout.recover_swaps(self.index_path, drop_stray=True)
         repaired = self.repair()  # drop artifacts of a crashed append
@@ -1843,24 +1872,30 @@ class IndexBuilder:
         seg_chunk = os.path.join(self.index_path, SEGMENTS_DIR,
                                  f"chunk=a{append_id}")
         src.select("part_id", "doc_id", *self.config.columns) \
-            .groupBy("part_id").applyInPandas(
+            .groupBy("part_id").applyInArrow(
                 _segment_builder(cfg_json), layout.SEGMENTS_SCHEMA) \
             .write.mode("overwrite").parquet(seg_chunk)
-        self._merge_fragments(self.spark.read.parquet(seg_chunk), cfg_json) \
+        new_segs = self.spark.read.parquet(seg_chunk)
+        # read by the merge's hot-term test and folded into the stats
+        chunk_stats = _term_stats(new_segs).cache()
+        self._merge_fragments(new_segs, chunk_stats, cfg_json) \
             .write.mode("append").partitionBy("bucket").parquet(
                 os.path.join(self.index_path, POSTINGS_DIR))
 
-        # stats + meta recomputed from the full postings table
-        postings = self.spark.read.parquet(
-            os.path.join(self.index_path, POSTINGS_DIR))
-        postings.groupBy("col", "term").agg(
-            F.sum("df").alias("df"), F.first("bucket").alias("bucket"),
+        # stats: appended postings only add to a term's df, so the new
+        # dictionary is the committed one plus this chunk's — no rescan
+        # of the full postings table
+        stats_dir = os.path.join(self.index_path, STATS_DIR)
+        _term_stats(
+            self.spark.read.parquet(stats_dir)
+            .select(*[f.name for f in layout.STATS_SCHEMA.fields])
+            .unionByName(chunk_stats)
         ).write.mode("overwrite").partitionBy("bucket").parquet(
-            os.path.join(self.index_path, STATS_DIR) + "_new")
+            stats_dir + "_new")
+        chunk_stats.unpersist()
         # rename-ordered swap: the readable-dir gap is two renames, not a
         # whole rmtree; a crash in the gap is repaired by
         # layout.recover_swaps on the next open
-        stats_dir = os.path.join(self.index_path, STATS_DIR)
         os.rename(stats_dir, stats_dir + "_old")
         os.rename(stats_dir + "_new", stats_dir)
         shutil.rmtree(stats_dir + "_old")
@@ -1916,6 +1951,8 @@ class IndexBuilder:
             "docs_per_sec": (total_docs - (meta.total_docs or 0)) / max(secs, 1e-9),
         })
         if auto_compact_min_rows is not None:
+            postings = self.spark.read.parquet(
+                os.path.join(self.index_path, POSTINGS_DIR))
             frag = postings.groupBy("col", "term", "shard").count() \
                 .where(F.col("count") >= auto_compact_min_rows).limit(1)
             if frag.count():

@@ -33,8 +33,10 @@ import zlib
 from dataclasses import dataclass
 
 import numpy as np
+import pyarrow as pa
 
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 META_FILE = "_index_meta.json"
 DOCS_DIR = "docs"
@@ -155,29 +157,64 @@ def encode_blocks(
     }
 
 
-def encode_blocks_many(
+#: Arrow twin of SEGMENTS_SCHEMA — the segments kernel's output type
+SEGMENTS_ARROW_SCHEMA = to_arrow_schema(SEGMENTS_SCHEMA)
+
+#: largest payload one Arrow ``binary`` column may hold (int32 offsets)
+MAX_BINARY_BYTES = 2 ** 31 - 1
+
+
+def _binary(offsets: np.ndarray, data: np.ndarray) -> pa.Array:
+    """Arrow binary array over a flat numpy buffer: value i is
+    data.bytes[offsets[i]:offsets[i+1]] — zero per-value objects."""
+    if int(offsets[-1]) > MAX_BINARY_BYTES:
+        raise ValueError(
+            f"binary column of {int(offsets[-1])} bytes overflows Arrow "
+            "int32 offsets; encode fewer terms per call (term_slices)")
+    return pa.Array.from_buffers(
+        pa.binary(), offsets.size - 1,
+        [None, pa.py_buffer(offsets.astype(np.int32)),
+         pa.py_buffer(np.ascontiguousarray(data))])
+
+
+def _list(offsets: np.ndarray, values: np.ndarray,
+          field: str) -> pa.Array:
+    return pa.ListArray.from_arrays(
+        pa.array(offsets.astype(np.int32)), pa.array(values),
+        type=SEGMENTS_ARROW_SCHEMA.field(field).type)
+
+
+def encode_blocks_arrow(
     t_docs: np.ndarray,
     t_tfs: np.ndarray,
     t_norms: np.ndarray,
     bounds: np.ndarray,
     block_size: int,
-) -> dict:
-    """Vectorized :func:`encode_blocks` over MANY terms at once.
+    positions: np.ndarray | None = None,
+) -> dict[str, pa.Array]:
+    """Vectorized :func:`encode_blocks` over MANY terms, straight to Arrow.
 
     ``bounds`` delimits per-term runs in the (term, doc)-sorted triple
     arrays (term i owns [bounds[i], bounds[i+1])).  All block metadata
     (first/last/max_tf/min_norm) and the delta stream are computed with
     global numpy passes — one ``reduceat`` per metric instead of one
-    ``encode_blocks`` call per term, which is the segment-build hot
-    loop at realistic vocabulary (10^5+ terms per part).  Output is
-    byte-identical to per-term encode_blocks (property-tested).
+    ``encode_blocks`` call per term — and land in Arrow arrays without a
+    per-term Python object: list offsets are the per-term block counts'
+    prefix sum, binary offsets are the term bounds (x4 for uint32
+    streams).  Every row is byte-identical to per-term encode_blocks
+    (property-tested).
 
-    Returns dict with per-term LISTS: df, block_first, block_last,
-    block_max_tf, block_min_norm, deltas (bytes), tfs (bytes),
-    norms (bytes), sum_tf.
+    ``positions`` (uint32, aligned with the triples: triple i owns the
+    next tfs[i] entries) becomes the per-term ``positions`` buffer; None
+    gives empty buffers (a positions-free index).
+
+    Returns {column: pa.Array} for df, block_first, block_last,
+    block_max_tf, block_min_norm, deltas, tfs, norms, positions, sum_tf,
+    typed as in SEGMENTS_ARROW_SCHEMA.
     """
+    bounds = np.asarray(bounds, dtype=np.int64)
     nterms = bounds.size - 1
-    lengths = (bounds[1:] - bounds[:-1]).astype(np.int64)
+    lengths = bounds[1:] - bounds[:-1]
     nb = (lengths + block_size - 1) // block_size
     nb_off = np.concatenate(([0], np.cumsum(nb)))
     total_blocks = int(nb_off[-1])
@@ -187,11 +224,6 @@ def encode_blocks_many(
     b_start = bounds[:-1][term_of_block] + block_k * block_size
     b_end = np.minimum(b_start + block_size, bounds[1:][term_of_block])
 
-    block_first = t_docs[b_start].astype(np.int64)
-    block_last = t_docs[b_end - 1].astype(np.int64)
-    block_max_tf = np.maximum.reduceat(t_tfs, b_start).astype(np.int32)
-    block_min_norm = np.minimum.reduceat(t_norms, b_start).astype(np.int32)
-
     d64 = np.empty(t_docs.size, dtype=np.int64)
     if t_docs.size:
         d64[0] = 0
@@ -200,30 +232,55 @@ def encode_blocks_many(
         if int(d64.max(initial=0)) >= 2 ** 32:
             raise ValueError(
                 "doc_id gap overflows uint32 delta (block spans parts?)")
-    deltas = d64.astype(np.uint32)
-    tfs32 = t_tfs.astype(np.uint32)
-    norms8 = t_norms.astype(np.uint8)
-    sum_tf = np.add.reduceat(t_tfs, bounds[:-1]).astype(np.int64) \
-        if t_docs.size else np.empty(0, np.int64)
-
-    out = {
-        "df": lengths.tolist(),
-        "block_first": [block_first[nb_off[i]:nb_off[i + 1]]
-                        for i in range(nterms)],
-        "block_last": [block_last[nb_off[i]:nb_off[i + 1]]
-                       for i in range(nterms)],
-        "block_max_tf": [block_max_tf[nb_off[i]:nb_off[i + 1]]
-                         for i in range(nterms)],
-        "block_min_norm": [block_min_norm[nb_off[i]:nb_off[i + 1]]
-                           for i in range(nterms)],
-        "deltas": [deltas[bounds[i]:bounds[i + 1]].tobytes()
-                   for i in range(nterms)],
-        "tfs": [tfs32[bounds[i]:bounds[i + 1]].tobytes()
-                for i in range(nterms)],
-        "norms": [norms8[bounds[i]:bounds[i + 1]].tobytes()
-                  for i in range(nterms)],
-        "sum_tf": sum_tf.tolist(),
+        block_max_tf = np.maximum.reduceat(t_tfs, b_start)
+        block_min_norm = np.minimum.reduceat(t_norms, b_start)
+        sum_tf = np.add.reduceat(t_tfs, bounds[:-1]).astype(np.int64)
+    else:
+        block_max_tf = block_min_norm = np.empty(0, np.int32)
+        sum_tf = np.zeros(nterms, np.int64)
+    if positions is None:
+        pos_off = np.zeros(nterms + 1, np.int64)
+        positions = np.empty(0, np.uint32)
+    else:
+        cum_tf = np.concatenate(([0], np.cumsum(t_tfs, dtype=np.int64)))
+        pos_off = cum_tf[bounds] * 4
+    return {
+        "df": pa.array(lengths),
+        "block_first": _list(nb_off, t_docs[b_start].astype(np.int64),
+                             "block_first"),
+        "block_last": _list(nb_off, t_docs[b_end - 1].astype(np.int64),
+                            "block_last"),
+        "block_max_tf": _list(nb_off, block_max_tf.astype(np.int32),
+                              "block_max_tf"),
+        "block_min_norm": _list(nb_off, block_min_norm.astype(np.int32),
+                                "block_min_norm"),
+        "deltas": _binary(bounds * 4, d64.astype(np.uint32)),
+        "tfs": _binary(bounds * 4, t_tfs.astype(np.uint32)),
+        "norms": _binary(bounds, t_norms.astype(np.uint8)),
+        "positions": _binary(pos_off, positions.astype(np.uint32)),
+        "sum_tf": pa.array(sum_tf),
     }
+
+
+def term_slices(bounds: np.ndarray, t_tfs: np.ndarray,
+                with_positions: bool) -> list[tuple[int, int]]:
+    """Cut a part's terms into runs [i0, i1) whose binary columns each
+    fit one Arrow array (:data:`MAX_BINARY_BYTES`): the uint32 delta and
+    tf streams cost 4 bytes a posting, positions 4 bytes a token.  One
+    run in practice; a single term too large for one array raises in
+    :func:`encode_blocks_arrow`."""
+    bounds = np.asarray(bounds, dtype=np.int64)
+    nbytes = bounds * 4
+    if with_positions:
+        cum_tf = np.concatenate(([0], np.cumsum(t_tfs, dtype=np.int64)))
+        nbytes = np.maximum(nbytes, cum_tf[bounds] * 4)
+    out, i0, nterms = [], 0, bounds.size - 1
+    while i0 < nterms:
+        i1 = int(np.searchsorted(nbytes, nbytes[i0] + MAX_BINARY_BYTES,
+                                 side="right")) - 1
+        i1 = min(max(i1, i0 + 1), nterms)
+        out.append((i0, i1))
+        i0 = i1
     return out
 
 

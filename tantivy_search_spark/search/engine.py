@@ -2160,8 +2160,12 @@ class SearchIndex:
 
     def _postings_dataset(self):
         """pyarrow dataset over the postings files — the local path reads
-        the open-parquet index directly (bucket partition dirs + term
-        row-group statistics pushdown), no Spark job even cold.  File
+        the open-parquet index directly, no Spark job even cold.  The
+        bucket partition dirs prune files; within a file nothing is
+        pruned: the build writes term-unsorted files, and pyarrow 16
+        does not prune row groups on the ``isin`` filter the fetch uses
+        even on a term-sorted (``optimize_layout``) copy — measured per
+        fetch there, ``isin`` 22–25 ms against ``==`` 2.3–3.5 ms.  File
         listing happens once per reader; reload() drops it."""
         if getattr(self, "_pa_dataset", None) is None:
             import pyarrow.dataset as ds
@@ -2377,12 +2381,14 @@ class SearchIndex:
                             self.config.b, slop, offsets)
 
     #: dense-lookup eligibility: a term qualifies when its (post-
-    #: tombstone) posting count covers at least this fraction of the
-    #: corpus — below it the sparse searchsorted gather is already
-    #: cheap and the dense array would waste memory
+    #: tombstone) posting count covers at least this fraction of its
+    #: doc-id span (the dense array's length) — below it the sparse
+    #: searchsorted gather is already cheap and the dense array would
+    #: waste memory (at most 4 / LOCAL_DENSE_MIN_FRAC bytes a posting)
     LOCAL_DENSE_MIN_FRAC = 0.25
-    #: byte cap on the dense-lookup LRU (uint32 per corpus doc per
-    #: cached term; only terms the workload actually queries fill it)
+    #: byte cap on the dense-lookup LRU (uint32 per id of a cached
+    #: term's span; only terms the workload actually queries fill it).
+    #: A term whose array alone exceeds it is never cached.
     LOCAL_DENSE_MAX_BYTES = 2 << 30
     #: posting-count floor below which the sparse gather is trivially
     #: cheap and a dense array is pointless
@@ -2404,9 +2410,11 @@ class SearchIndex:
         keyed on the identity of the cached doc vector so a refilled
         score-cache entry rebuilds it.
         """
-        total = self.meta.total_docs or 0
-        if d.size < self.LOCAL_DENSE_MIN_DOCS \
-                or d.size < total * self.LOCAL_DENSE_MIN_FRAC:
+        if d.size < self.LOCAL_DENSE_MIN_DOCS:
+            return None
+        span = int(d[-1]) + 1  # d is sorted: the dense array's length
+        if d.size < span * self.LOCAL_DENSE_MIN_FRAC \
+                or span * 4 > self.LOCAL_DENSE_MAX_BYTES:
             return None
         if not hasattr(self, "_local_dense_cache"):
             from collections import OrderedDict
@@ -2416,13 +2424,16 @@ class SearchIndex:
         if ent is not None and ent[1] is d:
             cache.move_to_end(key)
             return ent[0]
-        pos = np.zeros(int(d[-1]) + 1, dtype=np.uint32)
+        if not cache:  # fresh, or emptied by reload()/close()
+            self._local_dense_bytes = 0
+        pos = np.zeros(span, dtype=np.uint32)
         pos[d] = np.arange(1, d.size + 1, dtype=np.uint32)
+        if ent is not None:  # stale: the score cache refilled this term
+            self._local_dense_bytes -= cache.pop(key)[0].nbytes
         cache[key] = (pos, d)
-        while len(cache) > 1 and sum(
-                e[0].nbytes for e in cache.values()) \
-                > self.LOCAL_DENSE_MAX_BYTES:
-            cache.popitem(last=False)
+        self._local_dense_bytes += pos.nbytes
+        while self._local_dense_bytes > self.LOCAL_DENSE_MAX_BYTES:
+            self._local_dense_bytes -= cache.popitem(last=False)[1][0].nbytes
         return pos
 
     @staticmethod
@@ -3032,13 +3043,15 @@ class SearchIndex:
         return [(int(all_docs[i]), float(total[i])) for i in pick]
 
     # ---------------------------------------------------------------- bitmaps
-    def _doc_ids_for_terms(self, col: str, tokens: list[str]) -> DataFrame:
-        """TermSetQuery semantics: OR of tokens -> distinct doc ids
-        (tombstones excluded)."""
+    def _doc_ids_for_terms(self, col: str, tokens: list[str],
+                           distinct: bool = True) -> DataFrame:
+        """TermSetQuery semantics: OR of tokens -> doc ids (tombstones
+        excluded); distinct unless ``distinct=False`` (see
+        :meth:`_decode_ids`)."""
         if not tokens:
             return self._require_spark().createDataFrame([], "row_id long")
         uniq = sorted(set(tokens))
-        cache_key = ("idsdf", col, tuple(uniq))
+        cache_key = ("idsdf" if distinct else "ids", col, tuple(uniq))
         hit = self._plan_cache.get(cache_key)
         if hit is not None:
             return hit
@@ -3047,7 +3060,7 @@ class SearchIndex:
             f"bucket IN ({_sql_int_list(buckets)}) "
             f"AND term IN ({_sql_str_list(uniq)}) "
             f"AND col = '{col}'"))
-        out = self._decode_distinct_ids(cand)
+        out = self._decode_ids(cand, distinct)
         if len(self._plan_cache) >= self._plan_cache_max:
             self._plan_cache.clear()
         self._plan_cache[cache_key] = out
@@ -3077,7 +3090,7 @@ class SearchIndex:
 
     def _local_doc_ids(self, atoms: list[tuple[str, str]]) -> dict:
         """(col, term) -> doc_ids only (unsorted), the embedded twin of
-        the Spark tier's ``_decode_distinct_ids``: the parquet fetch
+        the Spark tier's ``_decode_ids``: the parquet fetch
         prunes tfs/norms and the decode skips them too, so a cold hot
         -term bitmap touches ~1/3 the bytes of the full-triple path.
         Separate LRU from ``_local_cache``; a triple already decoded
@@ -3294,13 +3307,19 @@ class SearchIndex:
         return self._doc_ids_for_terms(col, self.config.analyzer(col)(term))
 
     def query_term_bitmap(self, col: str, term: str) -> bytes:
-        toks = self.config.analyzer(col)(term)
+        return self._terms_bitmap(("term", col, term, False), col,
+                                  self.config.analyzer(col)(term))
+
+    def _terms_bitmap(self, key: tuple, col: str, toks: list[str]) -> bytes:
+        """Bytes path of the term-set bitmaps: the bitmap packer ignores
+        duplicate ids, so the Spark tier collects them without the
+        ``distinct()`` exchange the public ``*_bitmap_df`` frames keep."""
         return self._bitmap_cached(
-            ("term", col, term, False),
+            key,
             (lambda: self._local_ids_for_terms(col, toks))
             if self.spark is None else
             (lambda: self._collect_bitmap(
-                self.query_term_bitmap_df(col, term))))
+                self._doc_ids_for_terms(col, toks, distinct=False))))
 
     def query_terms_bitmap_df(self, col: str, terms: list[str]) -> DataFrame:
         an = self.config.analyzer(col)
@@ -3310,24 +3329,15 @@ class SearchIndex:
     def query_terms_bitmap(self, col: str, terms: list[str]) -> bytes:
         an = self.config.analyzer(col)
         toks = [t for term in terms for t in an(term)]
-        return self._bitmap_cached(
-            ("terms", col, tuple(terms), False),
-            (lambda: self._local_ids_for_terms(col, toks))
-            if self.spark is None else
-            (lambda: self._collect_bitmap(
-                self.query_terms_bitmap_df(col, terms))))
+        return self._terms_bitmap(("terms", col, tuple(terms), False),
+                                  col, toks)
 
     def query_sentence_bitmap_df(self, col: str, sentence: str) -> DataFrame:
         return self._doc_ids_for_terms(col, self.config.analyzer(col)(sentence))
 
     def query_sentence_bitmap(self, col: str, sentence: str) -> bytes:
-        toks = self.config.analyzer(col)(sentence)
-        return self._bitmap_cached(
-            ("sentence", col, sentence, False),
-            (lambda: self._local_ids_for_terms(col, toks))
-            if self.spark is None else
-            (lambda: self._collect_bitmap(
-                self.query_sentence_bitmap_df(col, sentence))))
+        return self._terms_bitmap(("sentence", col, sentence, False), col,
+                                  self.config.analyzer(col)(sentence))
 
     def regex_term_bitmap_df(self, col: str, like_pattern: str) -> DataFrame:
         """Q4: LIKE -> regex over the term dictionary, then posting union.
@@ -3335,6 +3345,10 @@ class SearchIndex:
         The pattern is lowercased iff the column's chain lowercases
         (reference api_regex_term_bitmap.rs:28-40); RegexQuery matches the
         WHOLE term, hence the ^$ anchors."""
+        return self._regex_ids(col, like_pattern)
+
+    def _regex_ids(self, col: str, like_pattern: str,
+                   distinct: bool = True) -> DataFrame:
         pat = like_to_regex(like_pattern)
         if self.config.lowercases(col):
             pat = pat.lower()
@@ -3346,7 +3360,7 @@ class SearchIndex:
         cand = self._postings.where(F.col("col") == col).join(
             F.broadcast(matching), "term", "left_semi"
         )
-        return self._decode_distinct_ids(cand)
+        return self._decode_ids(cand, distinct)
 
     def _local_regex_bitmap(self, col: str, like_pattern: str) -> bytes:
         """In-process Q4: regex scan over the cached term dictionary,
@@ -3368,7 +3382,7 @@ class SearchIndex:
             (lambda: self._local_regex_bitmap(col, like_pattern))
             if self.spark is None else
             (lambda: self._collect_bitmap(
-                self.regex_term_bitmap_df(col, like_pattern))))
+                self._regex_ids(col, like_pattern, distinct=False))))
 
     # -- granule-exists checks (skip-index pruning hot path) ------------
     #
@@ -3451,9 +3465,14 @@ class SearchIndex:
         return self._granule_sweep(
             self.regex_term_bitmap(col, like_pattern), step, total_rows)
 
-    def _decode_distinct_ids(self, cand: DataFrame) -> DataFrame:
-        """Posting rows -> distinct alive doc ids; reads ONLY the
-        block_first/deltas columns (tfs/norms pruned at the parquet scan)."""
+    def _decode_ids(self, cand: DataFrame, distinct: bool) -> DataFrame:
+        """Posting rows -> alive doc ids; reads ONLY the block_first/
+        deltas columns (tfs/norms pruned at the parquet scan).
+
+        A doc matching several terms appears once per term unless
+        ``distinct`` — the public ``*_bitmap_df`` frames are distinct;
+        the bitmap bytes path skips that exchange (and its extra job)
+        because packing a bitmap ignores duplicate ids."""
         block_size = self.config.block_size
         self._swap_broadcast_pool()
         tomb = self._tombstone_small_array()
@@ -3474,15 +3493,16 @@ class SearchIndex:
                 if outs:
                     yield pd.DataFrame({"row_id": np.concatenate(outs)})
 
-        out = (
-            cand.select("block_first", "deltas")
-            .mapInPandas(decode_ids, "row_id long")
-            .distinct()
-        )
+        out = (cand.select("block_first", "deltas")
+               .mapInPandas(decode_ids, "row_id long"))
+        if distinct:
+            out = out.distinct()
         if anti_join_tombs:
             out = self._anti_tombstones(out, "row_id")
         return out
 
     def _collect_bitmap(self, df: DataFrame) -> bytes:
-        ids = [r["row_id"] for r in df.collect()]
-        return row_ids_to_u8_bitmap(ids)
+        # Arrow collect: ids repeated across a query's terms (the bytes
+        # path skips distinct()) cost no per-row Python objects
+        ids = df.toArrow().column("row_id").to_numpy()
+        return row_ids_to_u8_bitmap(ids.astype(np.int64, copy=False))

@@ -2,8 +2,8 @@
 
 The Spark layer never uses row-at-a-time Python UDFs (input_hint: "no
 per-row Python"); everything crosses the JVM/Python boundary as Arrow
-batches via mapInPandas / applyInPandas, and the hot loops below operate
-on whole pandas Series / numpy arrays.
+batches (the segments stage via applyInArrow / mapInArrow), and the hot
+loops below operate on whole Arrow arrays, pandas Series or numpy arrays.
 """
 
 from __future__ import annotations
@@ -73,7 +73,7 @@ def arrow_fast_eligible(cfg: dict) -> bool:
 
 
 def term_doc_tf_arrow(
-    s: pd.Series, doc_ids: np.ndarray, cfg: dict
+    s: pa.Array | pa.ChunkedArray | pd.Series, doc_ids: np.ndarray, cfg: dict
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Fused tokenize + explode + tf-count in Arrow C++ kernels.
 
@@ -87,6 +87,9 @@ def term_doc_tf_arrow(
     time in allocator/kernel contention when 32 workers churn millions of
     small strings each (measured: 70% system CPU at local[32]).
 
+    ``s`` is the text column as Arrow (the segments kernel passes its
+    input column through untouched) or as a pandas Series.
+
     Returns (terms, t_docs, t_tfs, doclens); the first three sorted by
     (term_code, doc_id) with equal terms contiguous, doclens aligned with
     the input rows.
@@ -95,8 +98,13 @@ def term_doc_tf_arrow(
     ttype = tok.get("type", "default")
     assert ttype in _ARROW_FAST_TYPES, ttype
     n = len(s)
+    if isinstance(s, pa.ChunkedArray):
+        s = s.combine_chunks()
     # explicit string type: an all-null series infers NullType otherwise
-    arr = pa.Array.from_pandas(s, type=pa.string())
+    arr = (s if isinstance(s, pa.Array)
+           else pa.Array.from_pandas(s, type=pa.string()))
+    if arr.type != pa.string():
+        arr = arr.cast(pa.string())
     if arr.null_count:
         arr = pc.fill_null(arr, "")
     stemmers = []

@@ -378,40 +378,108 @@ class TestReaderClose:
         assert after == before
 
 
-class TestEncodeBlocksMany:
+def _random_runs(rng, nterms):
+    """Per-term (docs, tfs, norms, positions) runs + their concatenation
+    in the (term, doc)-sorted layout the segments kernel encodes."""
+    import numpy as np
+
+    runs = []
+    for _ in range(nterms):
+        n = int(rng.integers(1, 300))
+        docs = np.sort(rng.choice(100_000, size=n, replace=False))
+        tfs = rng.integers(1, 50, size=n).astype(np.int64)
+        norms = rng.integers(0, 256, size=n).astype(np.uint8)
+        pos = rng.integers(0, 10_000, size=int(tfs.sum())).astype(np.uint32)
+        runs.append((docs.astype(np.int64), tfs, norms, pos))
+    bounds = np.concatenate(([0], np.cumsum([r[0].size for r in runs])))
+    flat = [np.concatenate([r[k] for r in runs]) if runs
+            else np.empty(0, np.int64) for k in range(4)]
+    return runs, bounds.astype(np.int64), flat
+
+
+class TestEncodeBlocksArrow:
     def test_equals_per_term_encode(self):
-        """encode_blocks_many must be byte-identical to per-term
-        encode_blocks over random multi-term posting sets."""
+        """encode_blocks_arrow must be byte-identical to per-term
+        encode_blocks over random multi-term posting sets, positions
+        buffer included."""
         import numpy as np
         from tantivy_search_spark.index.layout import (
-            encode_blocks, encode_blocks_many)
+            encode_blocks, encode_blocks_arrow)
 
         rng = np.random.default_rng(13)
         for trial in range(20):
-            nterms = int(rng.integers(1, 40))
-            runs = []
-            for _ in range(nterms):
-                n = int(rng.integers(1, 300))
-                docs = np.sort(rng.choice(100_000, size=n, replace=False))
-                tfs = rng.integers(1, 50, size=n).astype(np.int64)
-                norms = rng.integers(0, 256, size=n).astype(np.int64)
-                runs.append((docs.astype(np.int64), tfs, norms))
-            bounds = np.concatenate(
-                ([0], np.cumsum([r[0].size for r in runs])))
-            t_docs = np.concatenate([r[0] for r in runs])
-            t_tfs = np.concatenate([r[1] for r in runs])
-            t_norms = np.concatenate([r[2] for r in runs])
+            runs, bounds, (t_docs, t_tfs, t_norms, t_pos) = _random_runs(
+                rng, int(rng.integers(1, 40)))
             bs = int(rng.choice([4, 16, 128]))
-            many = encode_blocks_many(t_docs, t_tfs, t_norms, bounds, bs)
-            for i, (docs, tfs, norms) in enumerate(runs):
+            with_pos = bool(trial % 2)
+            enc = encode_blocks_arrow(t_docs, t_tfs, t_norms, bounds, bs,
+                                      t_pos if with_pos else None)
+            assert {len(a) for a in enc.values()} == {len(runs)}
+            for i, (docs, tfs, norms, pos) in enumerate(runs):
                 one = encode_blocks(docs, tfs, norms, bs)
-                assert many["df"][i] == one["df"], (trial, i)
+                assert enc["df"][i].as_py() == one["df"], (trial, i)
                 for k in ("block_first", "block_last", "block_max_tf",
                           "block_min_norm"):
-                    assert np.array_equal(many[k][i], one[k]), (k, i)
+                    assert enc[k][i].as_py() == one[k].tolist(), (k, i)
                 for k in ("deltas", "tfs", "norms"):
-                    assert many[k][i] == one[k], (k, i)
-                assert many["sum_tf"][i] == int(tfs.sum())
+                    assert enc[k][i].as_py() == one[k], (k, i)
+                assert enc["positions"][i].as_py() == (
+                    pos.tobytes() if with_pos else b"")
+                assert enc["sum_tf"][i].as_py() == int(tfs.sum())
+
+    def test_types_match_segments_schema(self):
+        import numpy as np
+        from tantivy_search_spark.index import layout
+
+        rng = np.random.default_rng(3)
+        _, bounds, (d, t, n, p) = _random_runs(rng, 5)
+        enc = layout.encode_blocks_arrow(d, t, n, bounds, 16, p)
+        for k, a in enc.items():
+            assert a.type == layout.SEGMENTS_ARROW_SCHEMA.field(k).type, k
+
+    def test_empty_input(self):
+        import numpy as np
+        from tantivy_search_spark.index.layout import encode_blocks_arrow
+
+        e64 = np.empty(0, np.int64)
+        for pos in (None, np.empty(0, np.uint32)):
+            enc = encode_blocks_arrow(e64, e64, np.empty(0, np.uint8),
+                                      np.array([0]), 16, pos)
+            assert {k: len(a) for k, a in enc.items()} == {
+                k: 0 for k in enc}
+
+    def test_term_slices_keep_binary_columns_in_bounds(self, monkeypatch):
+        """A part whose streams would overflow one Arrow binary array is
+        cut into term runs; encoding the runs gives the same rows."""
+        import numpy as np
+        from tantivy_search_spark.index import layout
+
+        rng = np.random.default_rng(5)
+        runs, bounds, (d, t, n, p) = _random_runs(rng, 30)
+        whole = layout.encode_blocks_arrow(d, t, n, bounds, 16, p)
+        cap = int(max(4 * (bounds[1:] - bounds[:-1]).max(),
+                      4 * max(r[1].sum() for r in runs)))
+        monkeypatch.setattr(layout, "MAX_BINARY_BYTES", cap)
+        slices = layout.term_slices(bounds, t, with_positions=True)
+        assert len(slices) > 1
+        assert slices[0][0] == 0 and slices[-1][1] == len(runs)
+        assert all(a[1] == b[0] for a, b in zip(slices, slices[1:]))
+        cum = np.concatenate(([0], np.cumsum(t)))
+        rows = []
+        for i0, i1 in slices:
+            b0, b1 = bounds[i0], bounds[i1]
+            enc = layout.encode_blocks_arrow(
+                d[b0:b1], t[b0:b1], n[b0:b1], bounds[i0:i1 + 1] - b0, 16,
+                p[cum[b0]:cum[b1]])
+            assert max(len(enc[k].buffers()[2] or b"") for k in
+                       ("deltas", "tfs", "positions")) <= cap
+            rows.extend(zip(*(enc[k].to_pylist() for k in sorted(enc))))
+        assert rows == list(zip(*(whole[k].to_pylist()
+                                  for k in sorted(whole))))
+        # one term larger than an array can hold is refused, not split
+        monkeypatch.setattr(layout, "MAX_BINARY_BYTES", 3)
+        with pytest.raises(ValueError, match="overflows Arrow"):
+            layout.encode_blocks_arrow(d, t, n, bounds, 16, p)
 
 
 class TestPositionsCodec:

@@ -211,6 +211,58 @@ class TestResume:
             os.path.join(path, "_checkpoints", "merge.json")) == t0
         assert m2.total_docs == m1.total_docs
 
+    def test_resume_between_stats_and_merge(self, spark, tmp_path,
+                                            monkeypatch):
+        """The stats table is written from the fragments before the
+        merge, which reads its hot terms from it: a build stopped after
+        the stats checkpoint resumes to an index row-identical to an
+        uninterrupted build, without redoing the stats stage."""
+        import pyarrow.dataset as ds
+
+        from tantivy_search_spark.config import IndexConfig
+        from tantivy_search_spark.index.builder import IndexBuilder
+        from corpora import part0_rows, part1_rows
+
+        cfg = IndexConfig.from_json(["col1", "col2", "col3"], "{}")
+        cfg.parts_per_shard = 2
+        df = spark.createDataFrame(part0_rows(0) + part1_rows(10))
+
+        def builder(path):
+            b = IndexBuilder(spark, path, cfg, rows_per_part=3)
+            b.merge_hot_df = 3  # some terms merge, the rest pass through
+            return b
+
+        def rows(path, sub):
+            tbl = ds.dataset(os.path.join(path, sub),
+                             partitioning="hive").to_table()
+            return sorted(tuple(tuple(v) if isinstance(v, list) else v
+                                for v in r.values())
+                          for r in tbl.to_pylist())
+
+        ref = str(tmp_path / "ref")
+        builder(ref).build(df, id_col="doc_id")
+
+        path = str(tmp_path / "stopped")
+
+        def stop(*a, **k):
+            raise RuntimeError("stopped before the merge")
+
+        with monkeypatch.context() as m:
+            m.setattr(IndexBuilder, "_merge_fragments", stop)
+            with pytest.raises(RuntimeError, match="before the merge"):
+                builder(path).build(df, id_col="doc_id")
+        ckdir = os.path.join(path, "_checkpoints")
+        assert os.path.exists(os.path.join(ckdir, "stats.json"))
+        assert not os.path.exists(os.path.join(ckdir, "merge.json"))
+        t_stats = os.path.getmtime(os.path.join(ckdir, "stats.json"))
+
+        builder(path).build(df, id_col="doc_id")
+        assert os.path.getmtime(os.path.join(ckdir, "stats.json")) == t_stats
+        for sub in ("postings", "stats"):
+            assert rows(path, sub) == rows(ref, sub), sub
+        # a merge ran: hot terms folded their fragments
+        assert len(rows(path, "postings")) < len(rows(path, "segments"))
+
 
 class TestDurableIds:
     def test_staged_ids_equal_checkpoint_ids(self, spark, tmp_path):
@@ -293,3 +345,76 @@ class TestBatchWithDeletes:
         monkeypatch.setattr(type(ix), "TOMBSTONE_BROADCAST_MAX", 0)
         assert ix._tombstone_small_array() is None  # scalar fallback
         self._assert_batch_equals_sequential(ix)
+
+
+class TestBitmapBytesPath:
+    """The bitmap bytes path collects doc ids without the distinct()
+    exchange (packing a bitmap ignores duplicates); the public
+    ``*_bitmap_df`` frames stay distinct."""
+
+    QUERIES = [("terms", ["ancient", "the", "rise"]),
+               ("sentence", "the ancient empires of the past"),
+               ("regex", "%an%")]
+
+    def _bytes(self, ix, kind, q):
+        return {"terms": ix.query_terms_bitmap,
+                "sentence": ix.query_sentence_bitmap,
+                "regex": ix.regex_term_bitmap}[kind]("col3", q)
+
+    def _check(self, ix):
+        from tantivy_search_spark.bitmap import row_ids_to_u8_bitmap
+        from tantivy_search_spark.search.engine import SearchIndex
+
+        local = SearchIndex.open_local(ix.index_path)
+        try:
+            for kind, q in self.QUERIES:
+                df = {"terms": ix.query_terms_bitmap_df,
+                      "sentence": ix.query_sentence_bitmap_df,
+                      "regex": ix.regex_term_bitmap_df}[kind]("col3", q)
+                ids = [r["row_id"] for r in df.collect()]
+                assert len(ids) == len(set(ids)), kind  # df stays distinct
+                got = self._bytes(ix, kind, q)
+                assert got == row_ids_to_u8_bitmap(ids), kind
+                assert got == self._bytes(local, kind, q), kind
+        finally:
+            local.close()
+
+    def test_terms_share_docs(self, fresh_index):
+        """The queries' terms overlap in docs, so the bytes path really
+        sees duplicate ids."""
+        ix = fresh_index
+        toks = ix.config.analyzer("col3")("the ancient empires of the past")
+        raw = ix._doc_ids_for_terms("col3", toks, distinct=False).collect()
+        assert len(raw) > len({r["row_id"] for r in raw})
+        self._check(ix)
+
+    def test_bytes_plan_has_no_exchange(self, fresh_index):
+        """No shuffle Exchange (a broadcast of the regex's matching
+        terms is fine) on the bytes path; the df path keeps one."""
+        import re
+
+        from test_plans import _plan
+
+        def shuffles(df):
+            return re.findall(r"(?<!Broadcast)Exchange", _plan(df))
+
+        ix = fresh_index
+        toks = ix.config.analyzer("col3")("the ancient empires")
+        assert not shuffles(
+            ix._doc_ids_for_terms("col3", toks, distinct=False))
+        assert shuffles(ix._doc_ids_for_terms("col3", toks))
+        assert not shuffles(ix._regex_ids("col3", "%an%", distinct=False))
+        assert shuffles(ix.regex_term_bitmap_df("col3", "%an%"))
+
+    def test_broadcast_tier(self, fresh_index):
+        ix = fresh_index
+        assert ix.delete_row_ids([0, 2])
+        assert ix._tombstone_small_array() is not None
+        self._check(ix)
+
+    def test_anti_join_tier(self, fresh_index, monkeypatch):
+        ix = fresh_index
+        assert ix.delete_row_ids([0, 2])
+        monkeypatch.setattr(type(ix), "TOMBSTONE_BROADCAST_MAX", 0)
+        assert ix._tombstone_small_array() is None
+        self._check(ix)

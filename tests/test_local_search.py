@@ -310,3 +310,70 @@ class TestDenseHotTermGather:
                 ix.bm25_search("the ancient", top_k=10,
                                operator_or=True).collect()]
         assert [(r, round(s, 6)) for r, s in after] == want
+
+    @staticmethod
+    def _fresh_dense(ix, monkeypatch, cap):
+        monkeypatch.setattr(type(ix), "LOCAL_DENSE_MIN_DOCS", 1)
+        monkeypatch.setattr(type(ix), "LOCAL_DENSE_MAX_BYTES", cap)
+        if hasattr(ix, "_local_dense_cache"):
+            ix._local_dense_cache.clear()
+
+    def test_sparse_id_span_allocates_nothing(self, corpus_a_index,
+                                              monkeypatch):
+        """Density is measured against the term's id span, not the
+        corpus size: 64 postings spread over 10^7 ids would need a 40 MB
+        array for a 0.0006%-dense term, so the sparse gather keeps it."""
+        import numpy as np
+
+        ix = corpus_a_index
+        self._fresh_dense(ix, monkeypatch, 2 << 30)
+        d = np.linspace(0, 10 ** 7, 64).astype(np.int64)
+        assert d.size >= ix.meta.total_docs * ix.LOCAL_DENSE_MIN_FRAC
+        assert ix._dense_pos_for(("col3", "sparse"), d) is None
+        assert ("col3", "sparse") not in getattr(ix, "_local_dense_cache",
+                                                 {})
+        dense = np.arange(0, 400, 2, dtype=np.int64)  # 50% of its span
+        assert ix._dense_pos_for(("col3", "dense"), dense).size == 399
+
+    def test_over_cap_entry_not_retained(self, corpus_a_index, monkeypatch):
+        import numpy as np
+
+        ix = corpus_a_index
+        self._fresh_dense(ix, monkeypatch, 1000)
+        small = np.arange(100, dtype=np.int64)  # 400 bytes
+        assert ix._dense_pos_for(("col3", "small"), small) is not None
+        big = np.arange(500, dtype=np.int64)  # 2000 bytes > cap
+        assert ix._dense_pos_for(("col3", "big"), big) is None
+        assert list(ix._local_dense_cache) == [("col3", "small")]
+        assert ix._local_dense_bytes == 400
+
+    def test_byte_counter_tracks_fills_and_evictions(self, corpus_a_index,
+                                                     monkeypatch):
+        import numpy as np
+
+        ix = corpus_a_index
+        self._fresh_dense(ix, monkeypatch, 3000)
+
+        def check():
+            cache = ix._local_dense_cache
+            assert ix._local_dense_bytes == sum(
+                e[0].nbytes for e in cache.values())
+            assert ix._local_dense_bytes <= 3000
+
+        for i, n in enumerate([200, 300, 100, 250, 700, 50, 600]):
+            ix._dense_pos_for(("col3", f"t{i}"), np.arange(n, dtype=np.int64))
+            check()
+        assert ("col3", "t0") not in ix._local_dense_cache  # evicted
+        # a refilled score-cache entry (new doc vector) replaces its array
+        ix._dense_pos_for(("col3", "t6"), np.arange(10, dtype=np.int64))
+        check()
+        # eviction can free everything but the newest entry
+        ix._dense_pos_for(("col3", "full"), np.arange(750, dtype=np.int64))
+        check()
+        assert list(ix._local_dense_cache) == [("col3", "full")]
+        ix.reload()
+        assert not ix._local_dense_cache
+        ix._dense_pos_for(("col3", "t0"), np.arange(20, dtype=np.int64))
+        check()
+        assert ix._local_dense_bytes == 80
+        ix._local_dense_cache.clear()

@@ -113,17 +113,16 @@ class TestPlans:
         b = IndexBuilder(spark, str(tmp_path / "m"), cfg, rows_per_part=2)
         b.merge_hot_df = 0  # every term routes through the pandas merge
         df = spark.createDataFrame(corpus_a_rows())
-        from tantivy_search_spark.udfs import term_doc_tf
         from tantivy_search_spark.index import layout
-        import pandas as pd  # noqa: F401
         # a minimal fragments frame through the real segment builder
-        from tantivy_search_spark.index.builder import _segment_builder
+        from tantivy_search_spark.index.builder import (
+            _segment_builder, _term_stats)
         segs = (df.withColumn("part_id", (df.doc_id / 2).cast("int"))
                 .select("part_id", "doc_id", "col1")
                 .groupBy("part_id")
-                .applyInPandas(_segment_builder(cfg.to_json()),
-                               layout.SEGMENTS_SCHEMA))
-        merged = b._merge_fragments(segs, cfg.to_json())
+                .applyInArrow(_segment_builder(cfg.to_json()),
+                              layout.SEGMENTS_SCHEMA))
+        merged = b._merge_fragments(segs, _term_stats(segs), cfg.to_json())
         p = _plan(merged)
         n = spark.sparkContext.defaultParallelism * 2
         assert re.search(
